@@ -124,8 +124,7 @@ def run_one(spark, name: str, sf_dir: str) -> float:
     # only the final stage — r17 speedup claims partly measured work moved
     # out of the timer. Timing build+execute together makes the number the
     # query's true end-to-end cost; for plan-only builders the delta is
-    # analysis time (tens of ms). Old-methodology numbers for the same code
-    # are recorded in OPTIMIZATION_r18.md for comparability.
+    # analysis time (tens of ms).
     t0 = time.perf_counter()
     df = QUERIES[name].builder(spark, sf_dir)
     df.write.mode("overwrite").format("noop").save()

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from etl_ecommerce_data_spark.functions.text import tokens
 from etl_ecommerce_data_spark.partitioning import spread_if_narrow
-from etl_ecommerce_data_spark.reuse import shared, shared_big
+from etl_ecommerce_data_spark.reuse import shared
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -277,11 +277,9 @@ def minhash_lsh_pairs(
     # banded candidate join. One adaptive shuffle here parallelizes the
     # whole plan; no-op at real scale (see partitioning.spread_if_narrow).
     base = spread_if_narrow(base)
-    # Materialize the hashed corpus once: groups and mapping both consume
-    # it with DIFFERENT downstream projections (no exchange reuse), so
-    # without the shared persist the full text scan + md5 runs once per
-    # consumer. Carries __text → corpus-scale, DISK_ONLY (see reuse.py).
-    hashed = shared_big(base.withColumn("__ch", F.md5("__text")))
+    # persisted: groups and mapping project it differently (no exchange reuse),
+    # so each would rerun the text scan + md5
+    hashed = shared(base.withColumn("__ch", F.md5("__text")))
     groups = hashed.groupBy("__ch").agg(
         F.min("doc_id").alias("rep_id"),
         F.count(F.lit(1)).alias("grp_n"),
@@ -303,7 +301,7 @@ def minhash_lsh_pairs(
     # probability ~|toks|²/2⁶⁵ — negligible), so the text column is scanned
     # once and no string work repeats. Verification intersects fixed-width
     # longs instead of strings — same counts, cheaper hashing.
-    rep_hs = shared_big(
+    rep_hs = shared(
         rep_docs.select("doc_id", _token_hashes(F.col("__text")).alias("__hs"))
     )
     banded = _banded_buckets_from_hashes(rep_hs, num_perms, bands)
@@ -512,7 +510,7 @@ def minhash_lsh_pairs_cross(
     old_base = df_corpus.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
     ).filter(F.col("__text").isNotNull())
-    # same adaptive widening as minhash_lsh_pairs: the checkpointed hash/band
+    # same adaptive widening as minhash_lsh_pairs: the persisted hash/band
     # tables inherit the scan's partition count, so a one-task scan would
     # serialize banding AND the band-bucket candidate join
     new_base = spread_if_narrow(new_base)
@@ -520,10 +518,10 @@ def minhash_lsh_pairs_cross(
 
     # one tokenize+hash scan per side, reused by banding AND verification
     # (see minhash_lsh_pairs)
-    new_hs = shared_big(
+    new_hs = shared(
         new_base.select("doc_id", _token_hashes(F.col("__text")).alias("__hs"))
     )
-    old_hs = shared_big(
+    old_hs = shared(
         old_base.select("doc_id", _token_hashes(F.col("__text")).alias("__hs"))
     )
     nb = shared(
@@ -859,15 +857,12 @@ def boilerplate_removal(
     """
     from etl_ecommerce_data_spark.functions.text import chunk_texts
 
-    # The chunk table feeds two consumers (frequency aggregate + membership
-    # join); shared-persist so the tokenize/chunk/posexplode — and whatever
-    # upstream transform produced text_col (e.g. the PII regexp chain in the
-    # hygiene pipeline) — runs once, not once per subtree. Carries text
-    # chunks → corpus-scale, DISK_ONLY.
+    # persisted: the frequency agg and the membership join would each rerun the
+    # tokenize/chunk/posexplode and whatever upstream transform made text_col
     # null text coalesces to '' (one empty chunk) so the one-row-per-doc
     # contract holds: posexplode of chunk_texts(NULL) would silently drop
     # the document from the output entirely
-    chunks = shared_big(
+    chunks = shared(
         docs.select(
             F.col(id_col).alias("__id"),
             F.posexplode(

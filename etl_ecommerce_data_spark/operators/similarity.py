@@ -44,7 +44,7 @@ from etl_ecommerce_data_spark.functions.vectors import (
     norm,
     to_double_array,
 )
-from etl_ecommerce_data_spark.reuse import shared, shared_big
+from etl_ecommerce_data_spark.reuse import shared
 
 
 def cosine_topk(
@@ -852,11 +852,9 @@ def embedding_near_dup_pairs(
                 # shipped per surviving candidate only). Connectivity/recall
                 # semantics match the minhash star cap (driver-pinned by
                 # dedup_star_cap_floor for the shared contract).
-                # The guard gives the band table several consumers (size agg,
-                # annotate join, star branch) — shared-persist so the
-                # signature UDF and explode run once, not once per branch.
-                # Vectors ride the band rows → corpus-scale, DISK_ONLY.
-                banded = shared_big(banded)
+                # persisted: the size agg, annotate join and star branch would
+                # each rerun the signature UDF and explode
+                banded = shared(banded)
                 sizes = banded.groupBy("band", "bucket").agg(
                     F.count(F.lit(1)).alias("__bkt_n"),
                     F.min("vec_a").alias("__anchor"),

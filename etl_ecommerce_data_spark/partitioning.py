@@ -13,8 +13,7 @@ constant).
 Only worth it where the downstream per-row work dominates the one narrow
 shuffle it adds: measured at sf0.1, plain map-side-combinable aggregates
 LOSE from spreading (pricing_summary 0.7 → 1.0 s) while banding/tokenize
-paths win multiples (see plans/queries.py:_spread_if_narrow, which this
-generalizes for operators that only see a DataFrame).
+paths and row-multiplying Expands (rollup, cube, multi-distinct) win.
 """
 
 from __future__ import annotations

@@ -43,7 +43,8 @@ from etl_ecommerce_data_spark.operators.cleaning import (
     dedup_exact_rows,
     normalize_strings,
 )
-from etl_ecommerce_data_spark.reuse import shared, shared_big
+from etl_ecommerce_data_spark.partitioning import spread_if_narrow
+from etl_ecommerce_data_spark.reuse import scoped, shared
 from etl_ecommerce_data_spark.sources.registry import load_table
 
 Builder = Callable[[SparkSession, str], DataFrame]
@@ -63,7 +64,7 @@ QUERIES: dict[str, QueryDef] = {}
 
 def register(name: str, description: str, oracle: str | None, tags: tuple[str, ...] = ()):
     def deco(fn: Builder) -> Builder:
-        QUERIES[name] = QueryDef(name, description, fn, oracle, tags)
+        QUERIES[name] = QueryDef(name, description, scoped(fn), oracle, tags)
         return fn
 
     return deco
@@ -92,21 +93,6 @@ def exact_avg(sum_col: F.Column, count_col: F.Column) -> F.Column:
 
 def day_diff(end: str, start: str) -> F.Column:
     return F.datediff(F.to_date(F.col(end)), F.to_date(F.col(start))).cast("long")
-
-
-def _spread_if_narrow(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Repartition to the cluster's default parallelism ONLY when the input
-    has fewer partitions (single-row-group fixture files scan as one task;
-    a real-scale scan already exceeds cores and this is a no-op — no
-    shuffle added). Worth one narrow shuffle ONLY where downstream work is
-    row-MULTIPLYING — the Expand behind rollup/cube/multi-distinct
-    replicates every row ×(levels+1) before the partial aggregate, so
-    serializing it on one core costs more than spreading the pruned
-    projection. Measured: plain map-side-combinable aggs LOSE from this
-    (pricing_summary 0.7 → 1.0 s at sf0.1) and correctly do not use it."""
-    if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        return df.repartition(spark.sparkContext.defaultParallelism)
-    return df
 
 
 # ============================================================================
@@ -714,8 +700,8 @@ GROUP BY ROLLUP(r.r_name, n.n_name)
     tags=("analytics", "rollup"),
 )
 def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # rollup = Expand ×3 after the fact join; see _spread_if_narrow
-    li = _spread_if_narrow(spark, load_table(spark, sf_dir, "lineitem"))
+    # rollup = Expand ×3 after the fact join; see partitioning.py
+    li = spread_if_narrow(load_table(spark, sf_dir, "lineitem"))
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -1137,7 +1123,7 @@ def q_dedup_minhash_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_rep_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, __hs) token-hash frame over exact-dedup REPRESENTATIVES —
     the same md5-groupBy/min-id pre-pass ``minhash_lsh_pairs`` declares.
-    Callers should ``shared_big(...)`` the result when it feeds several
+    Callers should ``shared(...)`` the result when it feeds several
     consumers."""
     base = docs.select("doc_id", F.col("text").alias("__text")).filter(
         F.col("__text").isNotNull()
@@ -1331,7 +1317,7 @@ def q_dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # also destroys the truth derivation (e.g. empty token-hash arrays →
     # null Jaccard) would otherwise satisfy anchor recall over an empty set.
     # The uncapped regime still asserts listing recall >= 0.95.
-    rep_hs = _dedup_rep_hashes(docs).transform(shared_big)
+    rep_hs = _dedup_rep_hashes(docs).transform(shared)
     star_truth, n_over = _minhash_star_truth(rep_hs, n_perms, n_bands, cap, 0.6)
     star_truth = star_truth.transform(shared)
     n_truth = star_truth.agg(F.count(F.lit(1)).alias("n_star_truth"))
@@ -1426,7 +1412,7 @@ def q_dedup_star_cap_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the floor demands each true one appears in the capped output
     # (_minhash_star_truth — the same construction the recall floors
     # assert inline in their capped regime).
-    rep_hs = _dedup_rep_hashes(docs).transform(shared_big)
+    rep_hs = _dedup_rep_hashes(docs).transform(shared)
     truth, n_over = _minhash_star_truth(rep_hs, 64, 16, cap, threshold)
     anchor = truth.join(capped, ["doc_a", "doc_b"], "left_anti").agg(
         F.count(F.lit(1)).alias("n_anchor_missed")
@@ -1856,11 +1842,9 @@ def q_doc_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("token"),
     )
-    # tok feeds dfreq AND the scoring join; dfreq feeds the scalar AND the
-    # join — unchecked, each consumer replays the scan+split+explode chain
-    # (6 parquet scans in the executed plan at sf0.1). Both are narrow
-    # (id+token / token+count).
-    tok = tok.transform(shared_big)
+    # persisted: tok feeds dfreq and the scoring join, dfreq the scalar and
+    # the join; each consumer would replay the scan+split+explode chain
+    tok = tok.transform(shared)
     dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     dfreq = dfreq.transform(shared)
     scal = dfreq.agg(
@@ -2788,7 +2772,7 @@ def q_embedding_star_cap_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bh"),
         )
         .select("vec_a", "__va", F.col("bh.band").alias("band"), F.col("bh.bucket").alias("bucket"))
-        .transform(shared_big)
+        .transform(shared)
     )
     sizes = banded.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("__n"), F.min("vec_a").alias("__anchor")
@@ -3422,10 +3406,7 @@ def q_event_type_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_second"),
         )
     )
-    # c is consumed by totals AND the final projection; without this
-    # checkpoint each consumer replays the full events scan + pivot + counts
-    # (8 parquet scans in the executed plan at sf0.1 — 4 full re-reads at
-    # scale). The checkpoint is |event_types| rows.
+    # persisted: totals and the final projection each replay the scan + pivot
     c = c.transform(shared)
     totals = c.agg(
         F.sum("n_first").cast("double").alias("tf"),
@@ -4563,9 +4544,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("frequency"),
         money_sum("o_totalprice").alias("monetary"),
     )
-    # The per-customer aggregate feeds three consumers (max-date scalar,
-    # threshold scalars, scoring scan); lazy-checkpoint it so the shuffle
-    # agg runs once, not three times (same idiom as the LSH band table).
+    # persisted: max-date, threshold and scoring consumers each rerun the agg
     per = per.transform(shared)
     mx = per.agg(F.max("last_date").alias("max_date"))
     r = per.crossJoin(F.broadcast(mx)).select(
@@ -4766,20 +4745,17 @@ FROM n_sh n LEFT JOIN cont c USING (doc_id)
     tags=("extension", "text", "training", "dedup"),
 )
 def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # shingling is row-MULTIPLYING (×~40 at 5-token shingles) and the explode
-    # feeds a checkpoint that freezes partition count — spread the one-task
-    # fixture scan so the shingle pass parallelizes (see _spread_if_narrow)
-    docs = _spread_if_narrow(
-        spark,
+    # shingling is row-MULTIPLYING (×~40 at 5-token shingles) — spread the
+    # one-task fixture scan so the shingle pass parallelizes (see
+    # partitioning.spread_if_narrow)
+    docs = spread_if_narrow(
         load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull()),
     ).withColumn("split", TX.hash_split(F.col("text")))
     sh = docs.select(
         "doc_id", "split", F.explode(TX.shingle_set(F.col("text"), 5)).alias("shingle")
     )
-    # The exploded shingle table feeds both the train-side distinct and the
-    # test-side join/count; checkpoint it lazily so the shingle expansion
-    # over the full corpus is computed once (LSH band-table idiom).
-    sh = sh.transform(shared_big)
+    # persisted: the train distinct and the test join both read the shingles
+    sh = sh.transform(shared)
     train = sh.filter(F.col("split") == "train").select("shingle").distinct()
     test_sh = sh.filter(F.col("split") == "test").select("doc_id", "shingle")
     n_sh = test_sh.groupBy("doc_id").agg(
@@ -5078,11 +5054,11 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # flags feeds the final aggregate plus both shingle sides of the
     # decontamination join — compute the scan + window once.
-    flags = flags.transform(shared_big)
+    flags = flags.transform(shared)
     sh = flags.filter(F.col("f5")).select(
         "doc_id", "f6", F.explode(TX.shingle_set(t, 5)).alias("shingle")
     )
-    sh = sh.transform(shared_big)
+    sh = sh.transform(shared)
     heldout = sh.filter(~F.col("f6")).select("shingle").distinct()
     dirty = (
         sh.filter(F.col("f6"))
@@ -5370,10 +5346,10 @@ def q_dedup_cross_corpus_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so a truth-destroying regression cannot green the row vacuously.
     old_hs = old_side.select(
         "doc_id", DD._token_hashes(F.col("text")).alias("__hs")
-    ).transform(shared_big)
+    ).transform(shared)
     new_hs = new_side.select(
         "doc_id", DD._token_hashes(F.col("text")).alias("__hs")
-    ).transform(shared_big)
+    ).transform(shared)
     star_truth, n_over = _minhash_star_truth_cross(
         new_hs, old_hs, dflt["num_perms"], dflt["bands"], dflt["bucket_cap"], 0.6
     )
@@ -5833,12 +5809,8 @@ def q_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t in _TFIDF_TERMS
         ]
     )
-    # df_t derived from tfw (tf_t > 0 ⇔ doc contains t) rather than from
-    # `per`, and tfw checkpointed: exchange reuse alone does not stop the
-    # final aggregate above the shared exchange from re-running per consumer
-    # (the executed plan showed the scan+explode chain 6×: dfs branch,
-    # scored branch, and n each replayed it). Narrow rows (doc_id + one
-    # long per term).
+    # df_t derived from tfw (tf_t > 0 ⇔ doc contains t), not from `per`.
+    # persisted: the dfs, scored and n branches each replay scan + explode
     tfw = tfw.transform(shared)
     dfs = tfw.groupBy().agg(
         *[
@@ -5965,9 +5937,7 @@ def q_daily_revenue_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dropped after. Identical to the global window whenever each year has
     # ≥ 29 active days (guaranteed for daily aggregates of retail orders).
     d = d.withColumn("__yr", F.substring("order_date", 1, 4).cast("int"))
-    # d (one row per day) feeds both the carry branch and the own branch;
-    # checkpoint so the orders scan + daily aggregate run once, not per
-    # branch (2 full scans at any scale otherwise)
+    # persisted: the carry and own branches each rerun scan + daily agg
     d = d.transform(shared)
     rn_desc = F.row_number().over(
         Window.partitionBy("__yr").orderBy(F.col("order_date").desc())
@@ -6120,9 +6090,9 @@ FROM orders"""
     tags=("extension", "profiling", "validation"),
 )
 def q_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # multi-distinct = Expand ×(distincts+1); see _spread_if_narrow
-    o = _spread_if_narrow(
-        spark, load_table(spark, sf_dir, "orders").select(*_PROFILE_COLS)
+    # multi-distinct = Expand ×(distincts+1); see partitioning.py
+    o = spread_if_narrow(
+        load_table(spark, sf_dir, "orders").select(*_PROFILE_COLS)
     )
     # Two aggregates instead of one wide one: min/max over STRING columns
     # cannot use a hash aggregate (variable-width buffer), and in the wide

@@ -1,84 +1,60 @@
-"""Multi-consumer materialization: compute a shared intermediate once per
-query execution, without running anything at plan-build time.
+"""Shared intermediates: computed once per query, never reused across queries.
 
-Why not ``localCheckpoint(eager=False)`` (the round-17 device): under AQE a
-*lazy* local checkpoint is not lazy — ``Dataset.checkpoint`` needs the
-final physical RDD, and ``AdaptiveSparkPlanExec.doExecute`` materializes
-every upstream shuffle stage to plan it. Consequences (driver ADVICE r17,
-VERDICT r17 #2/#3): (a) builder() runs most of the query before the timed
-action, so bench numbers measured work moved out of the timer; (b) each
-checkpoint is a sequential barrier — four chained checkpoints serialize
-~10 small jobs where one action could schedule their stages concurrently;
-(c) lineage is truncated, so at 100 TB a lost executor kills the job
-instead of recomputing the partition; (d) the executed plan is cut at a
-``Scan ExistingRDD``, hiding every upstream exchange from plan-shape
-regression tests.
+The rule: ``shared(df)`` persists ``df`` at ``MEMORY_AND_DISK`` so every
+consumer inside one query reads it once computed, and ``scoped(builder)``
+(applied to every registered builder by ``plans.queries.register``)
+unpersists all frames ``shared`` recorded when the next builder starts.
 
-``shared()`` instead uses ``persist()``: genuinely lazy (nothing runs at
-build), materialized inside the consuming action (stages of independent
-consumers are scheduled concurrently; the cached RDD's shuffle
-dependencies are shared, so the subtree still computes once), lineage
-retained (executor loss ⇒ recompute, not job death), and the full plan
-stays visible through ``InMemoryRelation`` for the shuffle-budget tests.
+Why it holds:
 
-No result reuse across invocations: Spark's ``CacheManager`` matches cache
-entries by canonicalized plan, so a SECOND invocation of the same builder
-in one session would silently read the previous invocation's materialized
-blocks — persisted-intermediate reuse across runs, which this engine
-forbids (every bench/oracle invocation must compute from the parquet
-inputs). ``shared()`` therefore keys each persist by the plan's semantic
-hash and UNPERSISTS the previous entry for that key before persisting the
-new frame: re-invoking a builder always recomputes from source, and
-storage is bounded at one live entry per distinct intermediate (no
-CacheManager leak in long sessions). Unpersisting an intermediate a prior
-invocation's still-live DataFrame references is safe — persist never
-changes results, the lineage is intact and simply recomputes.
-
-Storage levels: ``MEMORY_AND_DISK`` (columnar cache, spills under
-pressure) for narrow/bounded frames; ``big=True`` pins corpus-scale
-frames (exploded token/chunk tables, token-hash arrays) to ``DISK_ONLY``
-so a 100 TB intermediate cannot evict the session's working set — the
-storage/recompute tradeoff is documented in SCALE.md.
+- ``persist`` is lazy. Nothing runs at build time; the frame materializes
+  inside the consuming action, lineage is kept (a lost executor recomputes
+  a partition rather than failing the job), and the full upstream plan stays
+  visible under ``InMemoryRelation``.
+- Spark's ``CacheManager`` matches cached plans by canonical form, so a
+  re-invoked builder would otherwise read the previous invocation's blocks.
+  Releasing at each builder's start makes every invocation compute from its
+  inputs, and bounds storage to one query's intermediates.
+- Unpersisting a frame that an earlier, still-referenced DataFrame reads is
+  safe: persistence never changes results, the plan recomputes from lineage.
+- ``MEMORY_AND_DISK`` spills under memory pressure, and nothing outlives its
+  query, so a corpus-scale frame cannot crowd out a later query's work.
 """
 
 from __future__ import annotations
 
-import os
+import functools
+from collections.abc import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-_LIVE: dict[int, DataFrame] = {}
+_LIVE: list[DataFrame] = []
 
 
-def shared(df: DataFrame, big: bool = False) -> DataFrame:
-    """Persist ``df`` for multi-consumer reuse WITHIN one query execution,
-    evicting any previous invocation's cache entry for the same plan (see
-    module docstring for why that eviction is a correctness-posture
-    requirement, not housekeeping).
-
-    ``SPARK_GRAFT_SHARED=0`` makes this a no-op — the plan-shape tests use
-    it so shuffle budgets count every Exchange of the FULL pipeline
-    (``InMemoryTableScan`` would otherwise hide the exchanges inside each
-    cached subtree from the executed-plan string, the r17-ADVICE budget
-    blind spot). Results are persist-independent, so the hook can never
-    change what a query computes."""
-    if os.environ.get("SPARK_GRAFT_SHARED", "1") == "0":
-        return df
-    key = df._jdf.queryExecution().analyzed().semanticHash()
-    prev = _LIVE.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist(False)
-        except Exception:  # pragma: no cover — session already stopped
-            pass
-    out = df.persist(StorageLevel.DISK_ONLY if big else StorageLevel.MEMORY_AND_DISK)
-    _LIVE[key] = out
+def shared(df: DataFrame) -> DataFrame:
+    """Persist ``df`` for the consumers of the current query."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _LIVE.append(out)
     return out
 
 
-def shared_big(df: DataFrame) -> DataFrame:
-    """``shared`` at ``DISK_ONLY`` — for corpus-scale intermediates (token
-    explodes, per-chunk tables, token-hash arrays) whose in-memory columnar
-    form would dominate executor storage at real scale."""
-    return shared(df, big=True)
+def scoped(builder: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """``builder``, first releasing every frame the previous query shared."""
+
+    @functools.wraps(builder)
+    def run(*args, **kwargs) -> DataFrame:
+        _release()
+        return builder(*args, **kwargs)
+
+    return run
+
+
+def _release() -> None:
+    while _LIVE:
+        df = _LIVE.pop()
+        try:
+            df.unpersist(False)
+        except Py4JError:  # its session has already stopped
+            pass

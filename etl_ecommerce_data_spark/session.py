@@ -74,7 +74,7 @@ def get_spark(
         # 128 MB input splits: the right granularity for wide parquet scans;
         # at 100 TB this yields ~800k tasks, which AQE coalesces post-shuffle.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
