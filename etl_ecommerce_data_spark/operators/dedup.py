@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from etl_ecommerce_data_spark.functions.text import tokens
 from etl_ecommerce_data_spark.partitioning import spread_if_narrow
-from etl_ecommerce_data_spark.reuse import shared
+from etl_ecommerce_data_spark.reuse import scoped, shared
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -198,6 +198,7 @@ def _size_ratio_ok(n_a: Column, n_b: Column, threshold: float) -> Column:
     )
 
 
+@scoped
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.6,
@@ -474,6 +475,7 @@ def minhash_lsh_pairs(
     return cross.unionByName(intra)
 
 
+@scoped
 def minhash_lsh_pairs_cross(
     df_new: DataFrame,
     df_corpus: DataFrame,
@@ -680,6 +682,7 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
+@scoped
 def simhash_pairs(
     df: DataFrame,
     max_hamming: int = 3,
@@ -833,6 +836,7 @@ def connected_components(
     return labels.select(F.col("n").alias(node_col), F.col("lbl").alias("cluster_id"))
 
 
+@scoped
 def boilerplate_removal(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -44,7 +44,7 @@ from etl_ecommerce_data_spark.functions.vectors import (
     norm,
     to_double_array,
 )
-from etl_ecommerce_data_spark.reuse import shared
+from etl_ecommerce_data_spark.reuse import scoped, shared
 
 
 def cosine_topk(
@@ -542,6 +542,7 @@ def ivf_topk_prefit(
     )
 
 
+@scoped
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -687,6 +688,7 @@ def _bucket_blas_verify(threshold: float, chunk_cells: int = 8_000_000):
     return verify
 
 
+@scoped
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,

@@ -64,8 +64,9 @@ QUERIES: dict[str, QueryDef] = {}
 
 def register(name: str, description: str, oracle: str | None, tags: tuple[str, ...] = ()):
     def deco(fn: Builder) -> Builder:
-        QUERIES[name] = QueryDef(name, description, scoped(fn), oracle, tags)
-        return fn
+        builder = scoped(fn)
+        QUERIES[name] = QueryDef(name, description, builder, oracle, tags)
+        return builder
 
     return deco
 
