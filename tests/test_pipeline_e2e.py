@@ -4,9 +4,14 @@ fixtures (FIXTURES.md §A dirty-data requirements)."""
 
 from __future__ import annotations
 
+import shutil
+import threading
+import time
+import warnings
+
 import pytest
 
-from etl_ecommerce_data_spark.pipeline import run_pipeline
+from etl_ecommerce_data_spark.pipeline import OLIST_FILES, run_pipeline
 from etl_ecommerce_data_spark.validation import ValidationError
 
 ORDERS = """order_id,customer_id,order_status,order_purchase_timestamp,order_approved_at,order_delivered_carrier_date,order_delivered_customer_date,order_estimated_delivery_date
@@ -200,3 +205,75 @@ def test_bronze_ingest_quarantine_mode(spark, tmp_path):
     quarantined = spark.read.parquet(f"{lake_dir}/bronze/_quarantine/orders")
     assert quarantined.count() == 1
     assert "bad_row" in quarantined.first()["raw_record"]
+
+
+@pytest.mark.parametrize("quarantine", [False, True])
+def test_bronze_schemas_are_the_declared_ones(spark, tmp_path, quarantine):
+    # silver_refine reads bronze with OLIST_SCHEMAS instead of inferring
+    # them; that is sound only while bronze is written from exactly those
+    from etl_ecommerce_data_spark.pipeline import bronze_ingest
+    from etl_ecommerce_data_spark.sources.registry import OLIST_SCHEMAS
+
+    for name, body in FILES.items():
+        (tmp_path / name).write_text(body)
+    lake_dir = tmp_path / "lake"
+    ingested = bronze_ingest(spark, str(tmp_path), str(lake_dir), quarantine=quarantine)
+    assert ingested == [t for f, t in OLIST_FILES.items() if f in FILES]
+
+    def fields(schema):  # names and types: nullability ignored, as parquet reads drop it
+        return [(f.name, f.dataType) for f in schema]
+
+    for t in ingested:
+        got = spark.read.parquet(str(lake_dir / "bronze" / t)).schema
+        assert fields(got) == fields(OLIST_SCHEMAS[t]), t
+
+
+@pytest.fixture
+def bronze_lake(lake, tmp_path):
+    """A private copy of the module lake's bronze zone, for silver runs that
+    must not touch the shared lake."""
+    _, lake_dir, _ = lake
+    shutil.copytree(f"{lake_dir}/bronze", tmp_path / "bronze")
+    return str(tmp_path)
+
+
+def test_silver_jobs_inherit_callers_local_properties(spark, bronze_lake):
+    from etl_ecommerce_data_spark.pipeline import silver_refine
+
+    sc = spark.sparkContext
+    # the scheduler's job counter: every job the call starts, in any thread
+    next_job_id = sc._jsc.sc().dagScheduler().nextJobId
+    first = next_job_id()
+    sc.setJobGroup("medallion-props", "silver_refine local-property test")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            done = silver_refine(spark, bronze_lake)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert done == ["orders", "customers", "order_items", "sellers", "order_reviews", "products"]
+    started = set(range(first, next_job_id()))
+    assert started
+    # job-start events reach the status tracker through the listener bus
+    deadline = time.monotonic() + 30
+    while True:
+        grouped = set(sc.statusTracker().getJobIdsForGroup("medallion-props"))
+        if started <= grouped or time.monotonic() > deadline:
+            break
+        time.sleep(0.1)
+    assert started <= grouped, sorted(started - grouped)
+
+
+def test_silver_failure_is_raised_unwrapped_after_all_threads_end(
+    spark, bronze_lake, monkeypatch
+):
+    import etl_ecommerce_data_spark.pipeline as P
+
+    def boom(df):
+        raise ValueError("boom")
+
+    monkeypatch.setitem(P.SILVER_TRANSFORMS, "customers", boom)
+    before = threading.active_count()
+    with pytest.raises(ValueError, match="^boom$"):
+        P.silver_refine(spark, bronze_lake)
+    assert threading.active_count() == before
