@@ -6174,16 +6174,15 @@ def q_linkage_block_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # twins (CO_ROTATE, transitively closed). The window below is the
 # planner's suggestion for the current round plus any documented hand
 # tunes. Every query remains registered and locally verified regardless
-# of window membership (tests/test_oracle_parity.py + the per-round
-# full-registry sf0.1 sweep recorded in SCALE.md).
+# of window membership (tests/test_oracle_parity.py + the full-registry
+# sweep `python tools/verify_local.py <sf_dir>`).
 _SWEEP_FIRST = [
     # Round-17 ordering, planned with tools/window_planner.py --round 17
     # --changed revenue_grouping_sets,sql_segment_priority_revenue and
     # applied VERBATIM:
     # (a) the two --changed queries first — both route through run_sql,
-    #     whose heal path changed this round (ADVICE r16: backslash-escape
-    #     handling in the literal blanker, backtick-tolerant CTE
-    #     exemption), and changed code re-verifies in-window;
+    #     so any change to its missing-relation heal re-verifies
+    #     in-window;
     # (b) the ENTIRE round-14-stale set (the 30 planner-flagged names the
     #     r16 SCALE.md handoff projected as this round's mandatory
     #     rotation), CO_ROTATE pulling the similarity_topk_lsh/ivf and

@@ -17,7 +17,6 @@ concurrent multi-dataset SQL.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -25,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_ecommerce_data_spark.sources.registry import SYNTHETIC_SCHEMAS, load_table
 
 # Last sf_dir registered, stored in the SESSION'S OWN runtime conf: repeat
-# run_sql calls on the same dataset skip the 11-table re-registration —
+# run_sql calls on the same dataset skip the all-table re-registration —
 # including the events ts-kind probe — instead of paying it per query.
 # Runtime conf is per-SparkSession, exactly the scope of the temp views it
 # describes. A module-level dict keyed by id(spark) (the previous shape)
@@ -60,81 +59,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     return registered
 
 
-# Line comments, block comments, and quoted string literals (doubled-quote
-# '' / "" AND backslash escapes respected — Spark's default dialect accepts
-# both, so a literal like 'it\'s ... FROM x' must not terminate the blank
-# early and leak "FROM x" into the scanned text; ADVICE r16), blanked
-# before relation-position matching in _heal_candidates. DOTALL so block
-# comments span lines.
-_SQL_NOISE = re.compile(
-    r"--[^\n]*"
-    r"|/\*.*?\*/"
-    r"|'(?:[^'\\]|''|\\.)*'"
-    r'|"(?:[^"\\]|""|\\.)*"',
-    re.DOTALL,
-)
-
-
-def _heal_candidates(named: list[str], query: str) -> list[str]:
-    """Which engine tables the missing-relation heal should probe, given the
-    lowercased last-segment names parsed from the error's backticks.
-
-    - A parsed name that IS an engine table → probe exactly it (the narrow
-      r12 path: a cache-hit heal touches one name, not eleven).
-    - A parsed name that is NOT an engine table but appears in the query in
-      RELATION position (right after FROM or JOIN, optionally backticked) →
-      it is the typo'd relation itself; no engine table can satisfy the
-      query, so refuse the heal without paying any probe (ADVICE r12).
-      Relation position, not raw substring (ADVICE r14): the caller reduces
-      qualified backticked identifiers to their lowercased last segment, so
-      a decoration token with a generic tail ('spark.sql.ansi.enabled' →
-      'enabled') that coincidentally appears as an alias, column, or string
-      literal must NOT trigger the refusal — only a FROM/JOIN occurrence
-      proves the name is the relation. Position is judged on the query with
-      string literals and comments blanked out, and a FROM/JOIN match that
-      is also DEFINED in the query as a CTE ('WITH enabled AS (...)') never
-      refuses (ADVICE r15): 'FROM enabled' inside a literal, behind '--',
-      or naming a CTE is not the missing relation — those shapes fall
-      through to the broad probe. Comma-separated FROM lists and other
-      exotic relation spots fall through the same way, which is safe:
-      refusal is purely an optimization, the broad probe fails identically
-      for a genuine typo after 11 cheap checks.
-    - No parsed name, or only names absent from relation position → the
-      parse told us nothing about the relation; fall back to the broad
-      all-tables probe rather than refusing a legitimate heal (ADVICE r13).
-      The broad probe is 11 cheap exists/tableExists checks —
-      re-registration is only paid when some table really is
-      present-but-unregistered.
-    """
-    schema_named = [n for n in named if n in SYNTHETIC_SCHEMAS]
-    if schema_named:
-        return schema_named
-    # Blank out string literals and comments BEFORE judging relation
-    # position: 'FROM x' inside a quoted literal or behind -- / /* */ is
-    # text, not a relation (ADVICE r15). Blanking (not deleting) with a
-    # space keeps \b boundaries honest for the surviving tokens. Spark's
-    # default dialect reads "..." as a string literal too; in ANSI mode it
-    # is an identifier — blanking it merely demotes a refusal to the broad
-    # probe, never the reverse.
-    q = _SQL_NOISE.sub(" ", query.lower())
-    for n in named:
-        if not re.search(rf"\b(?:from|join)\s+`?{re.escape(n)}(?:`|\b)", q):
-            continue
-        # FROM/JOIN hit — but a name the query itself DEFINES as a CTE
-        # ('WITH enabled AS (...) ... FROM enabled'), backticked or not
-        # (ADVICE r16), is resolvable and cannot be the missing relation;
-        # don't refuse on it. The '<name> AS (' shape is matched anywhere,
-        # not only right after WITH, so a named-WINDOW clause ('WINDOW w AS
-        # (PARTITION BY ...)') also exempts a coincidentally-typo'd 'FROM
-        # w' — safe direction (the refusal is purely an optimization; the
-        # broad probe fails identically), it just pays the 11 cheap checks
-        # the refusal would have saved (ADVICE r16).
-        if re.search(rf"\b`?{re.escape(n)}`?\s*(?:\([^)]*\))?\s+as\s*\(", q):
-            continue
-        return []
-    return list(SYNTHETIC_SCHEMAS)
-
-
 def run_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     if spark.conf.get(_REGISTERED_KEY, None) != sf_dir:
         register_views(spark, sf_dir)
@@ -144,41 +68,16 @@ def run_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     except AnalysisException as exc:
         # A table file that APPEARED in sf_dir after the first registration
         # (register_views skips absent files) has no view yet on a cache
-        # hit. Heal ONLY when (a) the failure is a missing relation — by
-        # error class, with a message-substring fallback for builds that
-        # render the text without the class token — and (b) some engine
-        # table's parquet is present but unregistered (a typo'd name would
-        # otherwise pay the full 11-view re-registration, events ts-kind
-        # probe included, before failing identically). Anything else
-        # re-raises unchanged.
-        cond = ""
-        for attr in ("getCondition", "getErrorClass"):  # 4.x / older alias
-            getter = getattr(exc, attr, None)
-            if callable(getter):
-                cond = getter() or ""
-                if cond:
-                    break
-        missing_relation = cond.startswith("TABLE_OR_VIEW_NOT_FOUND") or (
-            "TABLE_OR_VIEW_NOT_FOUND" in str(exc)
-        )
-        if not missing_relation:
-            # cheap gate FIRST: any other AnalysisException re-raises
-            # before paying the backtick parse and catalog probes below
-            raise
-        # Narrow the 'unregistered' probe to the relation the error NAMES
-        # (Spark renders it backtick-quoted, possibly qualified): a typo'd
-        # relation must not pay the full 11-view re-registration — events
-        # ts-kind probe included — only to fail identically (ADVICE r12).
-        named = [
-            m.split(".")[-1].lower() for m in re.findall(r"`([^`]+)`", str(exc))
-        ]
-        candidates = _heal_candidates(named, query)
-        unregistered = any(
+        # hit. On a missing relation, re-register once if some engine
+        # table's parquet is present but unregistered; anything else
+        # re-raises. A typo'd relation pays one check per engine table
+        # (and at most one re-registration) before failing the same way.
+        missing = "TABLE_OR_VIEW_NOT_FOUND" in f"{exc.getCondition()} {exc}"
+        if not missing or not any(
             os.path.exists(os.path.join(sf_dir, f"{n}.parquet"))
             and not spark.catalog.tableExists(n)
-            for n in candidates
-        )
-        if not unregistered:
+            for n in SYNTHETIC_SCHEMAS
+        ):
             raise
         register_views(spark, sf_dir)
         return spark.sql(query)

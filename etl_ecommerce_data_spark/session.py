@@ -82,71 +82,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _silence_benign_accumulator_race(spark)
     return spark
-
-
-_ACC_FILTER_INSTALLED: set[int] = set()
-
-
-def _silence_benign_accumulator_race(spark: SparkSession) -> None:
-    """Deny-filter the DAGScheduler's ``Failed to update accumulator``
-    ERROR lines on this JVM.
-
-    Local mode can double-report a task completion when two concurrently
-    scheduled jobs race to materialize the same cached/checkpointed block
-    (``WARN BlockManager: Block ... already exists`` immediately precedes
-    it); the late completion then updates stage accumulators that were
-    already GC'd, and DAGScheduler logs one ERROR line per accumulator per
-    task — a benign Spark race (results and exit code unaffected) that
-    floods the evidence channel with ~70-line ERROR bursts. A log4j2
-    RegexFilter on that message keeps every OTHER DAGScheduler ERROR
-    visible. Scope honesty: the match is by message, so it hides ALL
-    accumulator-update failures on this logger, not only the race — an
-    acceptable trade because Spark accumulator updates are best-effort
-    metrics by design (an update failure never fails the task or changes
-    results; genuine job failures surface as driver exceptions and other
-    log lines). If a LoggerConfig for DAGScheduler already exists (a
-    deployment's own log4j2.properties), the filter is ADDED to it rather
-    than replacing it. ``load_table`` also calls this so FOREIGN sessions
-    (the external correctness driver's own SparkSession) get the same
-    clean evidence tail; the python-side memo makes the per-query call
-    free after the first, and a session whose log4j classes are absent or
-    incompatible is left untouched."""
-    key = id(spark.sparkContext)
-    if key in _ACC_FILTER_INSTALLED:
-        return
-    try:
-        jvm = spark.sparkContext._jvm
-        name = "org.apache.spark.scheduler.DAGScheduler"
-        ctx = jvm.org.apache.logging.log4j.core.LoggerContext.getContext(False)
-        config = ctx.getConfiguration()
-        result = jvm.org.apache.logging.log4j.core.Filter.Result
-        rf = jvm.org.apache.logging.log4j.core.filter.RegexFilter.createFilter(
-            ".*Failed to update accumulator.*", None, True,
-            result.DENY, result.NEUTRAL,
-        )
-        existing = config.getLoggerConfig(name)
-        if existing.getName() == name:
-            # a config for this exact logger already exists (deployment
-            # log4j2.properties, or a prior install in this JVM from a
-            # different python process) — attach the filter to it
-            existing.addFilter(rf)
-        else:
-            lc = (
-                jvm.org.apache.logging.log4j.core.config.LoggerConfig.newBuilder()
-                .withLoggerName(name)
-                .withLevel(existing.getLevel())
-                .withAdditivity(True)
-                .withConfig(config)
-                .build()
-            )
-            lc.addFilter(rf)
-            config.addLogger(name, lc)
-        ctx.updateLoggers()
-        _ACC_FILTER_INSTALLED.add(key)
-    except Exception:  # pragma: no cover - foreign log4j / classpath drift
-        _ACC_FILTER_INSTALLED.add(key)  # don't retry a broken classpath
 
 
 def ensure_nanos_as_long(spark: SparkSession) -> None:

@@ -18,10 +18,7 @@ from __future__ import annotations
 
 import os
 
-from etl_ecommerce_data_spark.session import (
-    _silence_benign_accumulator_race,
-    ensure_nanos_as_long,
-)
+from etl_ecommerce_data_spark.session import ensure_nanos_as_long
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -227,10 +224,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in SYNTHETIC_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(SYNTHETIC_SCHEMAS)}")
-    # foreign sessions (the external driver's own SparkSession) get the same
-    # clean evidence tail as engine-built ones; memoized, so free after the
-    # first call per session
-    _silence_benign_accumulator_race(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         kind = events_ts_kind(spark, path)

@@ -888,7 +888,8 @@ def _bucketed_upsert_batch(
     """One micro-batch of the bucketed latest-per-user upsert. Module-level
     (not a closure) so the touched-bucket contract is unit-testable.
 
-    Three scale decisions, each fixing a measured 100× cost (SCALE.md):
+    Three scale decisions, each fixing a measured 100× cost (round-10
+    record in `3ae0e6d:SCALE.md`):
 
     - per-batch "latest per user" is a ``max_by`` AGGREGATE, not a
       row_number window — aggregates get map-side partial combine, so the

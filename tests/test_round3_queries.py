@@ -433,145 +433,28 @@ def test_run_sql_marker_is_session_scoped_and_heals_missing_views(spark, tmp_pat
     with _pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND|cannot be found"):
         run_sql(spark, str(d), "SELECT COUNT(*) c FROM orders").first()
 
-    # orders.parquet appears AFTER the marker was set for this sf_dir. A
-    # TYPO'd relation must NOT trigger the heal just because orders is
-    # present-but-unregistered (ADVICE r12: the heal is keyed to the
-    # relation the error NAMES): after the typo fails, orders still has
-    # no view — the full 11-view re-registration was not paid.
+    # orders.parquet appears AFTER the marker was set for this sf_dir. An
+    # AnalysisException that is NOT a missing relation re-raises unchanged,
+    # without re-registering the present-but-unregistered orders...
     spark.range(2).selectExpr("id AS o_orderkey").write.parquet(
         str(d / "orders.parquet")
     )
-    with _pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND|cannot be found") as ei:
-        run_sql(spark, str(d), "SELECT * FROM definitely_absent_table")
-    if "`" in str(ei.value):
-        # Only builds that render the relation backtick-quoted promise the
-        # narrow no-heal path; on message-shape drift the product
-        # DELIBERATELY falls back to the broad probe (and may register),
-        # so this assertion would pin behavior the product doesn't claim.
-        assert not spark.catalog.tableExists("orders"), (
-            "typo'd relation paid the full re-registration"
-        )
+    from pyspark.errors import AnalysisException
+
+    with _pytest.raises(AnalysisException) as ei:
+        run_sql(spark, str(d), "SELECT no_such_col FROM lineitem")
+    assert "TABLE_OR_VIEW_NOT_FOUND" not in f"{ei.value.getCondition()} {ei.value}"
+    assert not spark.catalog.tableExists("orders")
     # ...but a query NAMING the late-arriving table heals on the cache hit
     assert run_sql(spark, str(d), "SELECT COUNT(*) c FROM orders").first()["c"] == 2
-    # a genuinely unknown table still fails loudly (no infinite retry)
+    # a TYPO'd relation fails loudly, also when a late-arriving table makes
+    # it pay one re-registration first (no infinite retry)
+    spark.range(1).selectExpr("id AS c_custkey").write.parquet(
+        str(d / "customer.parquet")
+    )
     with _pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND|cannot be found"):
         run_sql(spark, str(d), "SELECT * FROM definitely_absent_table")
     run_sql(spark, SF_SMOKE, "SELECT 1")
-
-
-def test_heal_candidates_contract():
-    """The missing-relation heal's probe-set policy (ADVICE r12 + r13 + r14):
-    engine-table names probe narrowly; a non-engine name in FROM/JOIN
-    relation position is the typo'd relation itself (refuse without
-    probing); a backtick parse that yields nothing usable about the
-    relation — no names, or only message decoration whose lowercased last
-    segment ('spark.sql.ansi.enabled' → 'enabled', the shape run_sql
-    actually produces) happens to collide with an alias/column/literal in
-    the query — falls back to the broad all-tables probe instead of
-    refusing a legitimate heal."""
-    from etl_ecommerce_data_spark.plans.sql_api import _heal_candidates
-    from etl_ecommerce_data_spark.sources.registry import SYNTHETIC_SCHEMAS
-
-    q = "SELECT COUNT(*) c FROM orders JOIN lineitem USING (o_orderkey)"
-    # engine-table name parsed → narrow probe, even alongside decoration
-    assert _heal_candidates(["orders"], q) == ["orders"]
-    assert _heal_candidates(["enabled", "orders"], q) == ["orders"]
-    # typo'd relation (non-engine, in FROM position) → refuse outright;
-    # backticked rendering in the query text refuses the same way
-    assert _heal_candidates(
-        ["definitely_absent_table"],
-        "SELECT * FROM definitely_absent_table",
-    ) == []
-    assert _heal_candidates(
-        ["definitely_absent_table"],
-        "SELECT * FROM `definitely_absent_table` WHERE 1=1",
-    ) == []
-    assert _heal_candidates(
-        ["mytypo"], "SELECT o_orderkey FROM orders JOIN MyTypo USING (k)"
-    ) == []
-    # nothing backticked → broad probe (pre-r12 fallback, unchanged)
-    assert _heal_candidates([], q) == list(SYNTHETIC_SCHEMAS)
-    # decoration-only backticks whose last segment is absent from the
-    # query → broad probe, not a refusal
-    assert _heal_candidates(["enabled"], q) == list(SYNTHETIC_SCHEMAS)
-    # the ADVICE r14 case: the decoration's last segment collides with an
-    # alias/column/literal OUTSIDE relation position — still a broad
-    # probe; a raw-substring match would have wrongly refused the heal
-    assert _heal_candidates(
-        ["enabled"],
-        "SELECT o_flags AS enabled FROM orders WHERE note = 'enabled'",
-    ) == list(SYNTHETIC_SCHEMAS)
-    # substring-inside-identifier never refuses either ('enabled' inside
-    # 'ansi_enabled_flag' has no identifier boundary)
-    assert _heal_candidates(
-        ["enabled"], "SELECT ansi_enabled_flag FROM orders"
-    ) == list(SYNTHETIC_SCHEMAS)
-    # qualified names are matched by their last segment, lowercased by the
-    # caller; the query match is case-insensitive
-    assert _heal_candidates(
-        ["mytypo"], "SELECT * FROM MyTypo"
-    ) == []
-    # the ADVICE r15 cases: a FROM/JOIN occurrence inside a string literal
-    # or comment is text, not a relation — broad probe, not refusal
-    assert _heal_candidates(
-        ["enabled"],
-        "SELECT * FROM orders WHERE note = 'copied FROM enabled source'",
-    ) == list(SYNTHETIC_SCHEMAS)
-    assert _heal_candidates(
-        ["enabled"],
-        "SELECT * FROM orders WHERE note = 'it''s FROM enabled'",
-    ) == list(SYNTHETIC_SCHEMAS)
-    assert _heal_candidates(
-        ["enabled"], "SELECT * FROM orders -- legacy: FROM enabled"
-    ) == list(SYNTHETIC_SCHEMAS)
-    assert _heal_candidates(
-        ["enabled"], "SELECT * /* was: JOIN enabled\n   ON 1=1 */ FROM orders"
-    ) == list(SYNTHETIC_SCHEMAS)
-    # ...and a FROM that names a CTE the query itself defines is resolvable,
-    # so it cannot be the missing relation — broad probe, not refusal
-    assert _heal_candidates(
-        ["enabled"],
-        "WITH enabled AS (SELECT 1 AS x) SELECT * FROM enabled JOIN orders",
-    ) == list(SYNTHETIC_SCHEMAS)
-    assert _heal_candidates(
-        ["enabled"],
-        "WITH enabled (x) AS (SELECT 1) SELECT * FROM enabled",
-    ) == list(SYNTHETIC_SCHEMAS)
-    # blanking literals must not blind the genuine-typo refusal
-    assert _heal_candidates(
-        ["mytypo"],
-        "SELECT * FROM mytypo WHERE note = 'FROM orders'",
-    ) == []
-    # the ADVICE r16 cases: backslash-escaped quote inside a literal must
-    # not terminate the blank early and leak the tail ('FROM enabled')
-    # into relation-position matching — broad probe, not refusal
-    assert _heal_candidates(
-        ["enabled"],
-        r"SELECT * FROM orders WHERE note = 'it\'s FROM enabled'",
-    ) == list(SYNTHETIC_SCHEMAS)
-    assert _heal_candidates(
-        ["enabled"],
-        'SELECT * FROM orders WHERE note = "x\\" FROM enabled"',
-    ) == list(SYNTHETIC_SCHEMAS)
-    # ...and backslash handling must not blind the refusal when the typo'd
-    # relation follows a backslash-escaped literal
-    assert _heal_candidates(
-        ["mytypo"],
-        r"SELECT * FROM mytypo WHERE note = 'a\'b'",
-    ) == []
-    # backtick-quoted CTE definition exempts the same as a bare one
-    assert _heal_candidates(
-        ["enabled"],
-        "WITH `enabled` AS (SELECT 1 AS x) SELECT * FROM enabled",
-    ) == list(SYNTHETIC_SCHEMAS)
-    # documented WINDOW-clause false positive (safe direction): a named
-    # window 'enabled AS (...)' exempts a typo'd 'FROM enabled' into the
-    # broad probe — the probe then fails identically, nothing silently
-    # succeeds
-    assert _heal_candidates(
-        ["enabled"],
-        "SELECT x FROM enabled WINDOW enabled AS (PARTITION BY x)",
-    ) == list(SYNTHETIC_SCHEMAS)
 
 
 def test_user_event_profile_sorts_by_type_not_rendered_string(spark, tmp_path):

@@ -1,8 +1,7 @@
 """Restart-path drill for the durable bucketed upsert at N× scale.
 
-The decade series (tools/scale3x_experiment.py) measures the upsert's
-STEADY streaming cost at 10×/100×; the round-11 restart drill measured the
-RESUME path at sf0.1 only. This tool completes the durability story
+The round-11 restart drill measured the upsert's RESUME path at sf0.1
+only. This tool completes the durability story
 (VERDICT r11 ask #6): full run → forced crash at the expensive replay
 point (newest checkpoint commit AND its manifest dropped — the
 crash-before-manifest case, where the replayed batch's merge recomputes
@@ -24,9 +23,9 @@ clean state. The pytest covers this cycle at test scale
 test_upsert_crash_under_concurrency_releases_lock_and_resumes); the
 drill proves the cycle's resume cost stays batch-bounded at N×.
 
-Events staging mirrors scale3x_experiment.build_nx's events section
-(single pyarrow file, copy-strided event_id/user_id → disjoint user
-populations replaying the identical timeline); only events is staged —
+Events are staged as N copies in a single pyarrow file, each copy's
+event_id/user_id offset by a stride, so the copies are disjoint user
+populations replaying the identical timeline; only events is staged —
 the upsert reads nothing else.
 
 Usage:
@@ -53,7 +52,7 @@ from etl_ecommerce_data_spark.streaming.events import (  # noqa: E402
 )
 
 SCRATCH = os.path.join(tempfile.gettempdir(), "upsert_restart_drill")
-ID_STRIDE = 10_000_000  # same disjointness stride as scale3x_experiment
+ID_STRIDE = 10_000_000  # per-copy id offset; copies stay disjoint while ids < it
 
 
 def build_nx_events(sf_dir: str, n_copies: int) -> str:
