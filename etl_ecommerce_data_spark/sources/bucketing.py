@@ -24,22 +24,14 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Superseded-copy dirs are pruned only once this old. For pre-digest
-# legacy-layout dirs (bare 8-hex right after the readable prefix, no
-# identity digest) the reason is prefix ambiguity: the readable prefix is
-# underscore-ambiguous across logical tables and the live-catalog guard
-# below is SESSION-local, so a freshly-written legacy dir could in principle
-# belong to a concurrent session still running pre-digest code sharing the
-# warehouse (ADVICE r13). Legacy dirs stopped being CREATED when the digest
-# layout shipped, so anything older than this window is genuinely abandoned.
-# For digest'd-layout dirs (identity digest in the prefix) the ambiguity is
-# gone but the session-local guard still is: a CONCURRENT session sharing
-# the warehouse may hold a live catalog entry over an old tag of the SAME
-# logical table, so fresh digest'd tags get the same grace window before a
-# sibling session may reclaim them (ADVICE r14). In both shapes a younger
-# dir is spared until it ages past the window (the prune re-runs on every
-# cache miss, so sparing is a deferral, not a leak).
-_LEGACY_PRUNE_MIN_AGE_SEC = 3600.0
+# Superseded-copy dirs are pruned only once this old. The identity digest
+# in the prefix rules out prefix ambiguity, but the live-catalog guard below
+# is SESSION-local: a CONCURRENT session sharing the warehouse may hold a
+# live catalog entry over an old tag of the SAME logical table, so fresh
+# tags get a grace window before a sibling session may reclaim them. A
+# younger dir is spared until it ages past the window (the prune re-runs on
+# every cache miss, so sparing is a deferral, not a leak).
+_PRUNE_MIN_AGE_SEC = 3600.0
 
 
 def _dir_age_sec(path: str) -> float:
@@ -158,11 +150,10 @@ def ensure_bucketed_copy(
     # (name='a', col='b_c', n=8 and name='a_b', col='c', n=8 both render
     # 'bkt_a_b_c_8_') — a live sibling of the other table with a bare
     # 8-hex tag would then be pruned below while its catalog entry
-    # survives (ADVICE r12). The digest makes prefix equality imply tuple
+    # survives. The digest makes prefix equality imply tuple
     # equality.
     ident = bucket_identity_digest(name, bucket_col, num_buckets, sort_col)
-    legacy_prefix = f"bkt_{name}_{bucket_col}_{num_buckets}{srt}_"
-    prefix = f"{legacy_prefix}{ident}_"
+    prefix = f"bkt_{name}_{bucket_col}_{num_buckets}{srt}_{ident}_"
     table = f"{prefix}{tag}"
     if not spark.catalog.tableExists(table):
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
@@ -192,7 +183,7 @@ def ensure_bucketed_copy(
                     # from under a live entry is the exact failure class
                     # this prune exists to avoid. That skip bounds
                     # in-session growth at one full table copy per
-                    # same-session source regeneration (ADVICE r13): the
+                    # same-session source regeneration: the
                     # skipped copies' catalog entries die with the
                     # session, so the NEXT session's prune reclaims them
                     # all — the warehouse never grows without bound
@@ -200,31 +191,16 @@ def ensure_bucketed_copy(
                     # regenerations (rare outside tests; dropping the
                     # superseded entry eagerly instead would break any
                     # not-yet-evaluated DataFrame still pointing at it).
-                    # Two superseded shapes: the current digest'd layout
-                    # (remainder after prefix is a bare 8-hex source tag)
-                    # and the PRE-DIGEST legacy layout (bare 8-hex right
-                    # after the readable prefix — without this branch,
-                    # pre-upgrade copies would leak one full table per
-                    # old regeneration forever, the exact growth this
-                    # prune exists to prevent). The legacy match reopens
-                    # the underscore ambiguity ONLY for dirs whose
-                    # catalog entry is already gone in THIS session — the
-                    # tableExists guard is session-local, so an ambiguous
-                    # other table live in a DIFFERENT session sharing the
-                    # warehouse is invisible to it (ADVICE r13). Hence
-                    # the age gate: legacy-shape dirs are pruned only
-                    # past _LEGACY_PRUNE_MIN_AGE_SEC, old enough that no
-                    # concurrent pre-digest writer can have just minted
-                    # them. Digest'd-layout dirs get the SAME age gate
-                    # (ADVICE r14): their prefix match does imply
-                    # identity-tuple equality — only a stale tag of THIS
-                    # exact logical table can match — but the tableExists
-                    # guard is session-local, so a CONCURRENT session
-                    # sharing the warehouse could hold a live catalog
-                    # entry (and unevaluated DataFrames) over an old tag
-                    # of the same table; the gate keeps any dir minted in
-                    # the last hour safe from that race. Residual caveat,
-                    # stated honestly: a concurrent session still holding
+                    # The age gate (_PRUNE_MIN_AGE_SEC): the prefix match
+                    # implies identity-tuple equality — only a stale tag
+                    # of THIS exact logical table can match — but the
+                    # tableExists guard is session-local, so a CONCURRENT
+                    # session sharing the warehouse could hold a live
+                    # catalog entry (and unevaluated DataFrames) over an
+                    # old tag of the same table; the gate keeps any dir
+                    # minted in the last hour safe from that race.
+                    # Residual caveat, stated honestly: a concurrent
+                    # session still holding
                     # a SUPERSEDED tag past the age gate remains exposed
                     # — full cross-session safety needs a shared catalog
                     # or a table format's commit protocol, neither of
@@ -235,12 +211,7 @@ def ensure_bucketed_copy(
                         d.startswith(prefix.lower())
                         and re.fullmatch(r"[0-9a-f]{8}", d[len(prefix):])
                         and _dir_age_sec(os.path.join(wh.path, d))
-                        > _LEGACY_PRUNE_MIN_AGE_SEC
-                    ) or (
-                        d.startswith(legacy_prefix.lower())
-                        and re.fullmatch(r"[0-9a-f]{8}", d[len(legacy_prefix):])
-                        and _dir_age_sec(os.path.join(wh.path, d))
-                        > _LEGACY_PRUNE_MIN_AGE_SEC
+                        > _PRUNE_MIN_AGE_SEC
                     )
                     if (
                         superseded

@@ -269,7 +269,7 @@ def test_superseded_prune_spares_sorted_variants(spark, tmp_path):
     from urllib.parse import urlparse
 
     from etl_ecommerce_data_spark.sources.bucketing import (
-        _LEGACY_PRUNE_MIN_AGE_SEC,
+        _PRUNE_MIN_AGE_SEC,
         ensure_bucketed_copy,
     )
 
@@ -289,32 +289,15 @@ def test_superseded_prune_spares_sorted_variants(spark, tmp_path):
     # a FRESH digest'd stale tag: same identity, young mtime — must be
     # spared by the age gate, since a concurrent session sharing the
     # warehouse could hold a live (session-local, hence invisible) catalog
-    # entry over it (ADVICE r14)
+    # entry over it
     fresh_dir = os.path.join(wh, f"bkt_tbprune_k_8_{ident}_beefdead")
-    # PRE-DIGEST legacy shapes: a superseded unsorted legacy tag (must be
-    # pruned once PAST THE AGE GATE — otherwise pre-upgrade copies leak one
-    # table per old regeneration forever), a legacy SORTED variant (must
-    # survive the unsorted call's prune, same as the digest'd sorted
-    # variant), and a FRESH legacy-shape dir (must be spared: the legacy
-    # prefix is underscore-ambiguous and the live-catalog guard is
-    # session-local, so a young legacy dir could belong to a concurrent
-    # pre-digest session sharing the warehouse — ADVICE r13)
-    legacy_stale = os.path.join(wh, "bkt_tbprune_k_8_deadbeef")
-    legacy_sorted = os.path.join(wh, "bkt_tbprune_k_8_sk_deadbeef")
-    legacy_fresh = os.path.join(wh, "bkt_tbprune_k_8_beefdead")
-    for d in (
-        sorted_dir, stale_dir, fresh_dir, legacy_stale, legacy_sorted,
-        legacy_fresh,
-    ):
+    for d in (sorted_dir, stale_dir, fresh_dir):
         os.makedirs(d, exist_ok=True)
-    # age the prunable dirs past the gate; legacy_fresh and fresh_dir keep
-    # their just-created mtimes (BOTH shapes are age-gated since ADVICE
-    # r14 — the session-local catalog guard can't see a concurrent
-    # session's live entry, so young dirs of either layout are spared)
-    old = time.time() - 2 * _LEGACY_PRUNE_MIN_AGE_SEC
+    # age the prunable dir past the gate; fresh_dir keeps its just-created
+    # mtime (the session-local catalog guard can't see a concurrent
+    # session's live entry, so young dirs are spared)
+    old = time.time() - 2 * _PRUNE_MIN_AGE_SEC
     os.utime(stale_dir, (old, old))
-    os.utime(legacy_stale, (old, old))
-    os.utime(legacy_sorted, (old, old))
     df = spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v")
     try:
         out = ensure_bucketed_copy(spark, df, str(src), "tbprune", "k", 8)
@@ -324,12 +307,6 @@ def test_superseded_prune_spares_sorted_variants(spark, tmp_path):
         assert os.path.isdir(fresh_dir), (
             "fresh digest'd stale tag pruned inside the age window — a "
             "concurrent session could hold a live entry over it"
-        )
-        assert not os.path.isdir(legacy_stale), "pre-digest legacy copy kept"
-        assert os.path.isdir(legacy_sorted), "legacy sorted variant was pruned"
-        assert os.path.isdir(legacy_fresh), (
-            "fresh legacy-shape dir pruned inside the age window — it could "
-            "be a concurrent pre-digest session's live ambiguous sibling"
         )
     finally:
         for t in [
@@ -341,8 +318,6 @@ def test_superseded_prune_spares_sorted_variants(spark, tmp_path):
 
         shutil.rmtree(sorted_dir, ignore_errors=True)
         shutil.rmtree(fresh_dir, ignore_errors=True)
-        shutil.rmtree(legacy_sorted, ignore_errors=True)
-        shutil.rmtree(legacy_fresh, ignore_errors=True)
 
 
 def test_superseded_prune_spares_underscore_ambiguous_sibling(spark, tmp_path):
@@ -369,8 +344,7 @@ def test_superseded_prune_spares_underscore_ambiguous_sibling(spark, tmp_path):
         wh, f"bkt_amb_b_c_8_{_bkt_ident('amb_b', 'c', 8)}_deadbeef"
     )
     # a superseded tag of the SAME identity → must be pruned once past the
-    # age gate (since ADVICE r14 digest'd tags get the same grace window as
-    # legacy dirs — a young one could back a concurrent session's live
+    # age gate (a young one could back a concurrent session's live
     # entry — so the test backdates it)
     stale_dir = os.path.join(
         wh, f"bkt_amb_b_c_8_{_bkt_ident('amb', 'b_c', 8)}_deadbeef"
@@ -379,11 +353,9 @@ def test_superseded_prune_spares_underscore_ambiguous_sibling(spark, tmp_path):
     os.makedirs(stale_dir, exist_ok=True)
     import time
 
-    from etl_ecommerce_data_spark.sources.bucketing import (
-        _LEGACY_PRUNE_MIN_AGE_SEC,
-    )
+    from etl_ecommerce_data_spark.sources.bucketing import _PRUNE_MIN_AGE_SEC
 
-    old = time.time() - 2 * _LEGACY_PRUNE_MIN_AGE_SEC
+    old = time.time() - 2 * _PRUNE_MIN_AGE_SEC
     os.utime(stale_dir, (old, old))
     df = spark.range(0, 50).selectExpr("id AS b_c", "id * 2 AS v")
     try:

@@ -322,43 +322,11 @@ def test_incremental_dedup_ingest_drops_cross_batch_duplicates(spark, tmp_path):
     }
 
 
-def test_incremental_dedup_ingest_handle_reclaims_eagerly(spark, tmp_path):
-    """Driver ADVICE r6: repeated invocations in a long-lived driver must
-    not accumulate snapshot dirs or atexit hooks — the handle reclaims its
-    scratch root eagerly, and the root set shrinks back."""
-    import os
-
-    from etl_ecommerce_data_spark.streaming import events as EV
-
-    rows = [(0, "a text"), (1, "b text"), (2, "a text")]
-    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    before = set(EV._INGEST_ROOTS)
-    with EV.run_incremental_dedup_ingest(
-        spark, str(tmp_path), as_handle=True
-    ) as snap:
-        assert os.path.isdir(snap.root)
-        assert snap.root in EV._INGEST_ROOTS
-        assert len(snap.df.collect()) == 2  # a-text deduped
-    # context exit released the scratch root and untracked it
-    assert not os.path.exists(snap.root)
-    assert EV._INGEST_ROOTS == before
-    # release is idempotent
-    snap.release()
-    # a second invocation reuses the ONE shared atexit hook (no per-call
-    # registration): the tracked-set grows by exactly the live handle
-    snap2 = EV.run_incremental_dedup_ingest(spark, str(tmp_path), as_handle=True)
-    assert EV._INGEST_ROOTS - before == {snap2.root}
-    snap2.release()
-    assert EV._INGEST_ROOTS == before
-
-
 def test_incremental_dedup_ingest_default_mode_leaves_nothing(spark, tmp_path):
-    """Driver ADVICE r7 closed: the DEFAULT (non-handle) mode must not
-    accumulate snapshot dirs either — the result is checkpointed off the
-    scratch dir, the dir reclaimed before return, and the frame stays
-    collectable (twice — it is pinned, not lazily re-read) afterwards."""
+    """Repeated calls in a long-lived driver must not accumulate snapshot
+    dirs: the result is checkpointed off the scratch dir, the dir reclaimed
+    before return, and the frame stays collectable (twice — it is pinned,
+    not lazily re-read) afterwards."""
     from etl_ecommerce_data_spark.streaming import events as EV
 
     rows = [(0, "a text"), (1, "b text"), (2, "a text")]
@@ -369,251 +337,31 @@ def test_incremental_dedup_ingest_default_mode_leaves_nothing(spark, tmp_path):
     import tempfile
 
     pattern = tempfile.gettempdir() + "/dedup_ingest_*"
-    before = set(EV._INGEST_ROOTS)
     on_disk_before = set(glob.glob(pattern))  # stale dirs of other sessions
     df = EV.run_incremental_dedup_ingest(spark, str(tmp_path))
-    # no new tracked root, and no NEW dedup_ingest_* scratch dir on disk
-    assert EV._INGEST_ROOTS == before
+    # no NEW dedup_ingest_* scratch dir on disk
     assert set(glob.glob(pattern)) - on_disk_before == set()
     assert len(df.collect()) == 2
     assert len(df.collect()) == 2  # still valid on a second action
 
 
-def test_file_sink_matches_memory_sink(spark, tmp_path):
-    """The production parquet file sink (streaming/events.py _run_to_parquet,
-    executor-side writes) emits exactly the row set of the driver-collected
-    memory verification sink for EVERY streaming runner — append mode
-    (native file sink), update mode (foreachBatch append matches the memory
-    sink's accumulation), and complete mode (foreachBatch per-batch
-    OVERWRITE matches the memory sink's table replacement; ADVICE r8: a
-    per-batch append would duplicate earlier batches' re-emitted state).
-    This is the sink swap the N-copy scaling experiments rely on above the
-    memory sink's driver-heap bound."""
-    from etl_ecommerce_data_spark.streaming.events import (
-        run_dedup_events_to_memory,
-        run_session_windows_to_memory,
-        run_stream_static_enrich_to_memory,
-        run_user_running_stats_to_memory,
-        run_view_purchase_join_to_memory,
-        run_windowed_stream_to_memory,
-    )
+def test_incremental_dedup_ingest_failure_leaves_nothing(spark, tmp_path):
+    """A failing stream must reclaim its scratch root before the error
+    propagates, not at interpreter exit: a documents table with no ``text``
+    column makes the foreachBatch body raise, and no new dedup_ingest_*
+    dir may remain on disk afterwards."""
+    import glob
+    import tempfile
 
-    runners = (
-        run_dedup_events_to_memory,  # append, native file sink
-        run_session_windows_to_memory,  # append, native file sink
-        run_user_running_stats_to_memory,  # update, foreachBatch append
-        run_view_purchase_join_to_memory,  # append, native file sink
-        run_windowed_stream_to_memory,  # complete, foreachBatch overwrite
-        run_stream_static_enrich_to_memory,  # complete, foreachBatch overwrite
-    )
-    for runner in runners:
-        mem = runner(spark, SF_SMOKE)
-        fil = runner(
-            spark, SF_SMOKE, sink="files", out_dir=str(tmp_path / runner.__name__)
-        )
-        cols = mem.columns
-        assert set(fil.columns) == set(cols)
-        mem_rows = sorted(map(tuple, mem.select(*cols).collect()))
-        fil_rows = sorted(map(tuple, fil.select(*cols).collect()))
-        assert len(mem_rows) > 0, runner.__name__
-        assert mem_rows == fil_rows, runner.__name__
+    from etl_ecommerce_data_spark.streaming.events import run_incremental_dedup_ingest
 
-
-def test_file_sink_tws_matches_memory(spark, tmp_path):
-    """transformWithState runner's file sink == memory sink (capability-gated
-    with the module's protobuf gate)."""
-    import pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf not available - transformWithState gated")
-    from etl_ecommerce_data_spark.streaming.events import (
-        run_user_type_counts_tws_to_memory,
-    )
-
-    mem = run_user_type_counts_tws_to_memory(spark, SF_SMOKE)
-    fil = run_user_type_counts_tws_to_memory(
-        spark, SF_SMOKE, sink="files", out_dir=str(tmp_path / "tws")
-    )
-    assert sorted(map(tuple, mem.collect())) == sorted(map(tuple, fil.collect()))
-
-
-def test_file_sink_zero_emissions_returns_empty_frame(spark, tmp_path):
-    """ADVICE r8: a stream with zero emissions must hand back an empty frame
-    with the stream's schema, not an opaque read.parquet path/inference
-    error — callers' own empty-result diagnostics (e.g. the session
-    runner's micro-batch-ordering RuntimeError) depend on it."""
-    from etl_ecommerce_data_spark.streaming.events import (
-        _run_to_parquet,
-        dedup_events_stream,
-        events_read_schema,
-        events_ts_kind,
-    )
-    import os
-
-    src = os.path.join(SF_SMOKE, "events.parquet")
-    kind = events_ts_kind(spark, src)
-    stream = (
-        spark.readStream.schema(events_read_schema(kind))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(SF_SMOKE)
-    )
-    from etl_ecommerce_data_spark.sources.registry import events_normalize_ts
-
-    ev = events_normalize_ts(stream, kind)
-    # a filter nothing passes -> the dedup stream emits zero rows
-    silenced = dedup_events_stream(ev.filter("event_id < 0")).select(
-        "event_id", "user_id", "event_type"
-    )
-    out = _run_to_parquet(silenced, spark, "append", str(tmp_path / "empty"))
-    assert out.columns == ["event_id", "user_id", "event_type"]
-    assert out.count() == 0
-
-
-def test_update_mode_file_sink_idempotent_under_batch_replay(spark, tmp_path):
-    """foreachBatch is at-least-once after a checkpoint restart, so the
-    update-mode file sink must tolerate a batch running TWICE with the same
-    batch_id without duplicating rows (per-batch-id overwrite subdirs —
-    the production exactly-once pattern for non-transactional sinks), while
-    distinct batch_ids still accumulate like the memory sink."""
-    from etl_ecommerce_data_spark.streaming.events import _foreach_batch_writer
-
-    data = str(tmp_path / "data")
-    write = _foreach_batch_writer(data, "update")
-    b0 = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
-    b1 = spark.createDataFrame([(3, 30)], "k long, v long")
-    write(b0, 0)
-    write(b0, 0)  # replayed batch: overwrites its own subdir, no dupes
-    write(b1, 1)
-    out = sorted(
-        map(
-            tuple,
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(data)
-            .collect(),
-        )
-    )
-    assert out == [(1, 10), (2, 20), (3, 30)]
-
-
-def test_update_mode_file_sink_multi_batch_equals_memory(spark, tmp_path):
-    """End-to-end multi-micro-batch update-mode run through BOTH sinks: the
-    per-batch-id subdir file sink must accumulate emissions across batches
-    exactly like the memory sink (3 files -> 3 batches -> one running-stats
-    emission per user per batch it appears in)."""
-    from etl_ecommerce_data_spark.streaming.events import (
-        _run_to_memory,
-        _run_to_parquet,
-        user_running_stats,
-    )
-
-    rows = [(u, float(v) / 100.0) for u in range(5) for v in range(100, 1300, 100)]
-    src = str(tmp_path / "src")
-    spark.createDataFrame(rows, "user_id long, value double").repartition(
-        3
-    ).write.parquet(src)
-
-    def stream():
-        return (
-            spark.readStream.schema("user_id long, value double")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-
-    mem = _run_to_memory(user_running_stats(stream()), spark, "update")
-    fil = _run_to_parquet(
-        user_running_stats(stream()), spark, "update", str(tmp_path / "sink")
-    )
-    mem_rows = sorted(map(tuple, mem.select("user_id", "n_events", "total_value").collect()))
-    fil_rows = sorted(map(tuple, fil.select("user_id", "n_events", "total_value").collect()))
-    assert len(mem_rows) >= 5  # multiple batches really emitted
-    assert mem_rows == fil_rows
-
-
-def test_update_file_sink_restart_replayed_batch_not_duplicated(spark, tmp_path):
-    """The at-least-once path FOR REAL: delete the newest commit marker from
-    the checkpoint after a run, so the restarted query re-executes that
-    micro-batch with the SAME batch_id (offsets logged, commit missing —
-    Spark's recovery contract). The per-batch-id overwrite writer must
-    leave the sink exactly-once; a plain parquet append here would
-    duplicate the replayed batch's rows."""
-    import os
-
-    from etl_ecommerce_data_spark.streaming.events import _foreach_batch_writer
-
-    src, ckpt, data = (str(tmp_path / d) for d in ("src", "ckpt", "data"))
-
-    def add_file(lo, hi):
-        spark.createDataFrame(
-            [(i,) for i in range(lo, hi)], "id long"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("id long")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.outputMode("update")
-            .foreachBatch(_foreach_batch_writer(data, "update"))
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    add_file(0, 50)
-    add_file(50, 100)
-    run_once()  # batches 0 and 1
-    commits = [f for f in os.listdir(os.path.join(ckpt, "commits"))
-               if not f.startswith(".")]
-    latest = max(commits, key=int)
-    os.remove(os.path.join(ckpt, "commits", latest))
-    crc = os.path.join(ckpt, "commits", f".{latest}.crc")  # checksum-FS twin
-    if os.path.exists(crc):
-        os.remove(crc)
-    add_file(100, 150)
-    run_once()  # replays batch 1, then batch 2
-    got = sorted(
-        r["id"]
-        for r in spark.read.option("recursiveFileLookup", "true")
-        .parquet(data)
-        .collect()
-    )
-    assert got == list(range(150))  # replayed batch rewrote, not duplicated
-
-
-def test_unknown_sink_value_errors_immediately(spark):
-    """A sink typo must raise, not silently fall back to the driver-collected
-    memory sink (at production volumes that silent fallback IS the
-    driver-heap OOM sink="files" exists to avoid)."""
-    from etl_ecommerce_data_spark.streaming.events import (
-        run_dedup_events_to_memory,
-    )
-
-    with pytest.raises(ValueError, match="unknown sink"):
-        run_dedup_events_to_memory(spark, SF_SMOKE, sink="file")
-
-
-def test_complete_mode_file_sink_replay_and_latest_state_only(spark, tmp_path):
-    """Complete-mode writer contract: each batch's whole-dir overwrite keeps
-    ONLY the latest full state (matching the memory sink's table
-    replacement) and is trivially replay-idempotent."""
-    from etl_ecommerce_data_spark.streaming.events import _foreach_batch_writer
-
-    data = str(tmp_path / "data")
-    write = _foreach_batch_writer(data, "complete")
-    b0 = spark.createDataFrame([(1, 1)], "k long, n long")
-    b1 = spark.createDataFrame([(1, 3), (2, 1)], "k long, n long")
-    write(b0, 0)
-    write(b1, 1)
-    write(b1, 1)  # replayed final batch rewrites the same answer
-    out = sorted(map(tuple, spark.read.parquet(data).collect()))
-    assert out == [(1, 3), (2, 1)]  # only the latest full state
+    no_text = spark.createDataFrame([(0, "a"), (1, "b")], "doc_id long, body string")
+    no_text.write.parquet(str(tmp_path / "documents.parquet"))
+    pattern = tempfile.gettempdir() + "/dedup_ingest_*"
+    on_disk_before = set(glob.glob(pattern))  # stale dirs of other sessions
+    with pytest.raises(Exception, match="text"):
+        run_incremental_dedup_ingest(spark, str(tmp_path))
+    assert set(glob.glob(pattern)) - on_disk_before == set()
 
 
 def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
@@ -666,80 +414,6 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert final[ua] == (20, 9.0)  # newer ts wins
     assert final[ub] == (11, 2.0)  # older update loses to current state
     assert final[uc] == (12, 3.0)  # untouched state intact
-
-
-def test_file_sink_rejects_stale_data_dir_without_checkpoint(spark, tmp_path):
-    """ADVICE r9: reusing an out_dir whose data/ holds part files from an
-    EARLIER run (fresh checkpoint → batch ids restart at 0) must fail fast
-    instead of silently mixing stale files into the read-back; resuming
-    with the checkpoint intact stays legitimate."""
-    import shutil
-
-    from etl_ecommerce_data_spark.streaming.events import (
-        run_windowed_stream_to_memory,
-    )
-
-    out = str(tmp_path / "sink")
-    first = run_windowed_stream_to_memory(
-        spark, SF_SMOKE, sink="files", out_dir=out
-    )
-    n = first.count()
-    assert n > 0
-    # legitimate resume: data + commits both present -> no error, same rows
-    again = run_windowed_stream_to_memory(
-        spark, SF_SMOKE, sink="files", out_dir=out
-    )
-    assert again.count() == n
-    # stale reuse: wipe the checkpoint but keep the data files
-    shutil.rmtree(str(tmp_path / "sink" / "ckpt"))
-    with pytest.raises(ValueError, match="another run"):
-        run_windowed_stream_to_memory(spark, SF_SMOKE, sink="files", out_dir=out)
-
-
-def test_sink_dir_lineage_guard_distinguishes_crash_from_stale(tmp_path):
-    """ADVICE r10 #1: part files + offsets-but-no-commits is a legitimate
-    crashed-before-first-commit lineage (Spark's recovery replays that
-    batch), NOT stale reuse — only data with no checkpoint trace at all
-    may raise."""
-    import os
-
-    from etl_ecommerce_data_spark.streaming.events import _check_sink_dir_lineage
-
-    def mk(case, offsets=False, commits=False, part=True):
-        out = str(tmp_path / case)
-        os.makedirs(os.path.join(out, "data"))
-        if part:
-            open(os.path.join(out, "data", "part-00000.parquet"), "w").close()
-        for sub, yes in (("offsets", offsets), ("commits", commits)):
-            d = os.path.join(out, "ckpt", sub)
-            os.makedirs(d)
-            if yes:
-                open(os.path.join(d, "0"), "w").close()
-        return out
-
-    with pytest.raises(ValueError, match="another run"):
-        _check_sink_dir_lineage(mk("stale"))  # data, no lineage -> stale
-    _check_sink_dir_lineage(mk("crashed", offsets=True))  # crash recovery ok
-    _check_sink_dir_lineage(mk("resume", offsets=True, commits=True))  # ok
-    _check_sink_dir_lineage(mk("fresh", part=False))  # no data at all ok
-
-
-def test_file_sink_resumes_after_crash_before_first_commit(spark, tmp_path):
-    """Integration twin of the guard unit test: wipe the commit markers but
-    keep the offsets (the exact on-disk state a run leaves when it dies
-    after writing data files but before its commit lands) — the rerun must
-    resume the lineage and converge to the same rows, not raise."""
-    import os
-
-    out = str(tmp_path / "sink")
-    first = run_windowed_stream_to_memory(spark, SF_SMOKE, sink="files", out_dir=out)
-    n = first.count()
-    assert n > 0
-    commits = os.path.join(out, "ckpt", "commits")
-    for f in os.listdir(commits):
-        os.remove(os.path.join(commits, f))
-    again = run_windowed_stream_to_memory(spark, SF_SMOKE, sink="files", out_dir=out)
-    assert again.count() == n
 
 
 def test_bucketed_upsert_restart_resumes_from_manifest_and_prunes(spark, tmp_path):
